@@ -8,22 +8,36 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** Time each selected query `iters` times through the noop sink;
     * returns SUCCESSFUL iteration times sorted ascending per query (an
-    * empty seq = the query failed every iteration). Shared by the
-    * reporting main below and [[graft.tools.BenchGate]] so the gate
-    * measures exactly what the round artifact reports. */
+    * empty seq = the query failed every iteration). Each iteration runs
+    * in its own [[Release.scoped]] block, whose free happens after the
+    * clock stops. A failed iteration is printed to stderr and passed to
+    * `failed`. Shared by the reporting main below and
+    * [[graft.tools.BenchGate]] so the gate measures exactly what the
+    * round artifact reports. */
   def time(spark: SparkSession, sfDir: String, iters: Int,
       selected: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)]): Seq[(String, Seq[Double])] =
+        org.apache.spark.sql.DataFrame)],
+      failed: (String, Throwable) => Unit = (_, _) => ())
+      : Seq[(String, Seq[Double])] =
     selected.map { case (name, fn) =>
       val times = (0 until iters).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
+        try Some(Release.scoped {
+          val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+          (System.nanoTime() - t0) / 1e9
+        })
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${describe(e)}")
+          failed(name, e)
+          None
+        }
       }
       name -> times.sorted
     }
+
+  /** Exception class and message, one line. */
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -53,7 +67,10 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val raw = time(spark, sfDir, iters, selected)
+    val errors = scala.collection.mutable.LinkedHashMap
+      .empty[String, Vector[String]]
+    val raw = time(spark, sfDir, iters, selected, (n, e) =>
+      errors(n) = errors.getOrElse(n, Vector.empty) :+ describe(e))
     // `queries` stays the min (the established cross-round comparison
     // key — best draw against host-steal spikes); `queries_median` is
     // the variance-aware companion: a single-run outlier moves the min
@@ -69,6 +86,11 @@ object Bench {
     def obj(kv: Seq[(String, Double)]) = kv
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // one message per failed iteration, for the queries that had any
+    val errorsObj = errors
+      .map { case (k, es) =>
+        Verify.quote(k) + ":" + es.map(Verify.quote).mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
     // total = successful queries only; failures are COUNTED, not summed —
     // a -1 marker must not silently shrink the total it sits inside
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
@@ -77,9 +99,9 @@ object Bench {
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""failures":$failures,"iters":$iters,"queries":${obj(results)},""" +
       s""""total_median":$totalMed,"queries_median":${obj(medians)},""" +
-      s""""sf":"$sfDir"}"""
+      s""""errors":$errorsObj,"sf":"$sfDir"}"""
     println(fullLine)
-    // Measurement-reporting fix (r14, disclosed in OPTIMIZATION_r14.md):
+    // Measurement-reporting fix (r14; its write-up was never committed):
     // the full line above is ~11 KB for 170 queries and has outlived the
     // driver's 2000-char stdout tail every round (BENCH_r01..r13 all carry
     // parsed:null), so no optimization round has earned driver-verified

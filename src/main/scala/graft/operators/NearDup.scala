@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.SimHash64.simhash64
+import graft.Release
 import graft.ops.{QueryDef, QueryModule, Tables}
 
 /** Near-duplicate detection on `documents` — the LLM-pipeline dedup family
@@ -156,14 +157,6 @@ object NearDup extends QueryModule {
       .orderBy($"id_a", $"id_b")
   }
 
-  /** One-slot free list for the transients the returned (lazy) verify
-    * plan still reads: the candidate-pair checkpoint, plus (above the
-    * broadcast cap, r14) the DISK_ONLY-persisted shingle table — same
-    * swap discipline as [[lastLabels]], freed via [[freeTransient]]
-    * which handles both kinds. */
-  private val lastCand =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
-
   /** Distinct-id count at or under this → the candidate ids broadcast-
     * semi-filter the shingle side (8 B/id ⇒ ≤ ~40 MB broadcast at the
     * cap). Above it (adversarial corpora where a large fraction of
@@ -205,7 +198,7 @@ object NearDup extends QueryModule {
     * dwarfs the block write+read it replaces. Probe:
     * `SPARK_GRAFT_VERIFY_IDS_CAP=0 SPARK_GRAFT_SCALE_ONLY=minhash_neardup
     * runMain graft.tools.ScaleBench 1000000` forces this path on any
-    * corpus (figures in OPTIMIZATION_r14.md). */
+    * corpus (the before/after figures were never committed). */
   private[graft] def verifiedCandidates(
       docs: DataFrame, cand0: DataFrame,
       cap: Long = VerifyIdsBroadcastCap): DataFrame = {
@@ -220,11 +213,12 @@ object NearDup extends QueryModule {
       else docs
     val shBase = bounded.select($"doc_id",
       graft.functions.VectorExpressions.text_shingles($"text", 3).as("sh"))
-    val sh =
+    // the returned (lazy) verify plan reads both: the candidate
+    // checkpoint and, above the cap, the persisted shingle table
+    val sh = Release.holdAll("NearDup.cand")(Seq(cand,
       if (belowCap) shBase
-      else shBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    Option(lastCand.getAndSet(Seq(cand, sh)))
-      .foreach(_.foreach(freeTransient))
+      else shBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)))
+      .last
     cand
       .join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
       .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
@@ -733,7 +727,7 @@ object NearDup extends QueryModule {
     * graph's component map, so a deployment that keeps both artifacts
     * pays no extra closure to find the blast radius. `standingCore`
     * must be storage-backed (checkpointed) by the caller: the re-peel
-    * swaps [[kcoreOnPairs]]'s one-slot free list, which releases the
+    * re-holds [[kcoreOnPairs]]'s registry slot, which releases the
     * standing build's transient blocks. */
   private[graft] def takedownKcoreOn(
       standingCore: DataFrame, // (doc_id, deg) k-core over standing corpus
@@ -815,15 +809,14 @@ object NearDup extends QueryModule {
     val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
       .localCheckpoint(true)
     // r13 (guide §2.6): the two standing artifacts read only the pairs
-    // checkpoint and swap DIFFERENT one-slot transients (lastLabels vs
-    // lastCore), so their build jobs — each a chain of bounded rounds
-    // with driver sync points — overlap from two driver threads instead
-    // of serializing ~equal wall times end to end.
-    val (standing, core) = graft.ops.Par.concurrently2(
-      survivorsFrom(docs, pairs).localCheckpoint(true),
-      kcoreOnPairs(pairs).localCheckpoint(true))
-    Option(lastTakedown.getAndSet(Seq(pairs, standing, core)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    // checkpoint and hold DIFFERENT registry slots (labels vs core, both
+    // in the caller's scope), so their build jobs — each a chain of
+    // bounded rounds with driver sync points — overlap from two driver
+    // threads instead of serializing ~equal wall times end to end.
+    val Seq(standing, core) = graft.ops.Par.concurrently(Seq(
+      () => survivorsFrom(docs, pairs).localCheckpoint(true),
+      () => kcoreOnPairs(pairs).localCheckpoint(true)))
+    Release.holdAll("NearDup.takedown")(Seq(pairs, standing, core))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownKcoreOn(core, standing, pairs, removed)
   }
@@ -836,8 +829,7 @@ object NearDup extends QueryModule {
     val docs = Tables.documents(s, d)
     val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
       .localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    Release.hold("NearDup.takedown")(pairs)
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownPagerankOn(pairs, removed)
   }
@@ -854,8 +846,7 @@ object NearDup extends QueryModule {
     val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
       .localCheckpoint(true)
     val standing = survivorsFrom(docs, pairs).localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs, standing)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    Release.holdAll("NearDup.takedown")(Seq(pairs, standing))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownSurvivors(docs, standing, pairs, removed)
   }
@@ -883,8 +874,7 @@ object NearDup extends QueryModule {
       .join(after.select($"doc_id", $"cluster_id".as("new_cluster"),
         $"survivor_id".as("new_surv")), Seq("doc_id"))
       .localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs, standing, cmp)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    Release.holdAll("NearDup.takedown")(Seq(pairs, standing, cmp))
     val touched = standing.join(broadcast(removed), Seq("doc_id"),
       "leftsemi")
     // r13 (guide §1.2: don't re-scan what one pass can answer): the
@@ -940,11 +930,6 @@ object NearDup extends QueryModule {
   def pageRank(s: SparkSession, d: String): DataFrame =
     pageRankOnPairs(minhashNearDup(s, d).select("id_a", "id_b"))
 
-  /** One-slot free list for the edge/degree checkpoints the returned
-    * (lazy) plan still reads — same swap discipline as [[lastLabels]]. */
-  private val lastRank =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   /** Scale shape: the graph is checkpointed ONCE (edges + degrees — both
     * orders of magnitude smaller than the corpus: only documents with a
     * near-dup edge appear), then each of the 5 fixed rounds is one
@@ -956,6 +941,7 @@ object NearDup extends QueryModule {
   private[graft] def pageRankOnPairs(
       pairs0: DataFrame, iters: Int = 5,
       hintBroadcasts: Boolean = true): DataFrame = {
+    require(iters >= 1, s"pageRank needs at least one round, got $iters")
     import pairs0.sparkSession.implicits._
     val Scale = 1000000000000L
     val pairs = pairs0.toDF("id_a", "id_b")
@@ -979,7 +965,7 @@ object NearDup extends QueryModule {
     // in ONE lazy plan — each broadcast subtree is materialized once
     // by the single final action, never per round.
     // r14 adjustments, both measured (JobProfile best-of-3 + focused
-    // min-of-7, see OPTIMIZATION_r14.md):
+    // min-of-7; the per-run figures were never committed):
     //  - the cap divides by 2·iters: this ONE chained plan keeps
     //    2·iters broadcast relations alive until the final action, so
     //    the per-broadcast budget the cap was sized for must be shared
@@ -1005,16 +991,11 @@ object NearDup extends QueryModule {
         .select($"node", $"deg",
           (lit(base) + expr("(85 * coalesce(inflow, 0L)) div 100")).as("pr"))
     }
-    val out = pr.select($"node".as("doc_id"), $"pr".as("pr_scaled"), $"deg")
-      .orderBy($"doc_id")
-    Option(lastRank.getAndSet(out)).foreach(freeLocalCheckpoint)
-    out
+    // the returned plan reads the edge and degree checkpoints
+    Release.hold("NearDup.rank")(
+      pr.select($"node".as("doc_id"), $"pr".as("pr_scaled"), $"deg")
+        .orderBy($"doc_id"))
   }
-
-  /** Previous [[kcoreOnPairs]] result — one-slot checkpoint free, same
-    * discipline as `lastRank`. */
-  private val lastCore =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** k-CORE of a pair graph via bounded-round peeling: repeatedly drop
     * nodes with fewer than `k` surviving neighbors; what remains is the
@@ -1071,81 +1052,21 @@ object NearDup extends QueryModule {
         .where($"deg" >= k).select($"src".as("node"))
         .localCheckpoint(false)
       val n = next.count() // materialize, then the previous round can go
-      freeLocalCheckpoint(alive)
+      Release.free(alive)
       alive = next
       aliveN = n
     }
-    val out = edges
+    Release.hold("NearDup.core")(edges
       .join(hinted(alive.select($"node".as("src"))), Seq("src"), "leftsemi")
       .join(hinted(alive.select($"node".as("dst"))), Seq("dst"), "leftsemi")
       .groupBy($"src").agg(count(lit(1)).as("deg"))
       .select($"src".as("doc_id"), $"deg")
-      .orderBy($"doc_id")
-    Option(lastCore.getAndSet(out)).foreach(freeLocalCheckpoint)
-    out
+      .orderBy($"doc_id"))
   }
 
   /** Gate form: the 2-core of the verified near-dup pair graph. */
   def kcore(s: SparkSession, d: String): DataFrame =
     kcoreOnPairs(minhashNearDup(s, d).select("id_a", "id_b"))
-
-  /** Free the storage blocks behind every `localCheckpoint` a Dataset's
-    * plan reads. `Dataset.unpersist` only clears CacheManager entries
-    * (plans cached via `.persist`), NOT the RDD blocks a local
-    * checkpoint lives in — those sit behind `LogicalRDD` leaves and
-    * must be unpersisted at the RDD level, else every iteration of a
-    * loop leaks a generation of blocks into storage memory until the
-    * ContextCleaner happens to collect them (the round-4
-    * q_dedup_clusters pathology, which also polluted the queries
-    * benched after it). The plan is WALKED, not root-matched: the
-    * labels handed across invocations are derived plans (a Project or
-    * Aggregate over the checkpoint leaf), so a root-only match would
-    * silently free nothing. Only call this once no live plan
-    * references the checkpoints: local checkpoints cannot be
-    * recomputed. */
-  private[graft] def freeLocalCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Free a one-slot transient that may be EITHER a localCheckpoint or
-    * a persisted frame (r14: [[verifiedCandidates]]' above-cap shingle
-    * table is a DISK_ONLY persist): `unpersist` is a no-op on frames
-    * that were never persisted, and the checkpoint-RDD sweep is a no-op
-    * on plans without [[org.apache.spark.sql.execution.LogicalRDD]]
-    * leaves, so applying both is safe on every slot. */
-  private[graft] def freeTransient(ds: DataFrame): Unit = {
-    ds.unpersist(blocking = false)
-    freeLocalCheckpoint(ds)
-  }
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Seq(lastRank, lastCore, lastLabels).foreach { r =>
-      Option(r.getAndSet(null)).foreach(freeLocalCheckpoint)
-    }
-    Option(lastWinnowFps.getAndSet(null)).foreach(_.unpersist(false))
-    Seq(lastCand, lastTakedown).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.foreach(freeTransient))
-    }
-  }
-
-  /** The standing-artifact checkpoints (pairs + survivor table) of the
-    * previous takedown query — same one-slot swap as [[lastLabels]]. */
-  private val lastTakedown =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
-
-  /** The FINAL label checkpoint of the previous [[connectedComponents]]
-    * run: the returned plan still reads it (the caller has not
-    * materialized yet), so it can only be freed on the NEXT invocation —
-    * the same one-slot swap [[graft.operators.Similarity]] uses for its
-    * cached cell assignments, and the same serial call pattern
-    * assumption (gate/bench drivers run queries one at a time). */
-  private val lastLabels =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Connected components over an undirected pair list: every `doc_id`
     * in `nodes` → (doc_id, cluster_id = min reachable id). Factored out
@@ -1208,8 +1129,8 @@ object NearDup extends QueryModule {
       if (starContraction) starLabels(pairs)
       else propagateLabels(pairs, propagationRoundCap)
         .getOrElse(starLabels(pairs))
-    Option(lastLabels.getAndSet(labels)).foreach(freeLocalCheckpoint)
-    labels
+    // the final labels outlive this call: the caller's plan reads them
+    Release.hold("NearDup.labels")(labels)
   }
 
   /** Min-label propagation: (doc_id, comp) for every node with an edge.
@@ -1264,13 +1185,13 @@ object NearDup extends QueryModule {
           coalesce($"nbr_min" < $"comp", lit(false)).as("chg"))
         .localCheckpoint(eager = false)
       changed = updated.where($"chg").count() // materializes the checkpoint
-      freeLocalCheckpoint(labels) // previous round's blocks, now unreferenced
+      Release.free(labels) // previous round's blocks, now unreferenced
       labels = updated
       rounds += 1
     }
-    freeLocalCheckpoint(sym)
+    Release.free(sym)
     if (changed > 0) { // diameter > cap: hand the graph to star contraction
-      freeLocalCheckpoint(labels)
+      Release.free(labels)
       None
     } else Some(labels.select($"doc_id", $"comp"))
   }
@@ -1326,7 +1247,7 @@ object NearDup extends QueryModule {
       converged = small.exceptAll(edges)
         .union(edges.exceptAll(small))
         .isEmpty
-      freeLocalCheckpoint(edges)
+      Release.free(edges)
       edges = small
       rounds += 1
     }
@@ -1728,16 +1649,8 @@ object NearDup extends QueryModule {
         explode($"fps").as("fp"))
   }
 
-  /** Previous [[winnowNearDup]] invocation's cached fingerprint table —
-    * unpersist-FIRST one-slot swap, same discipline and reasoning as
-    * [[graft.operators.Similarity]]'s `lastCells` (CacheManager matches
-    * by plan, so persist-then-unpersist would drop the new entry). */
-  private val lastWinnowFps =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def winnowNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastWinnowFps.getAndSet(null)).foreach(_.unpersist(false))
     // the postings table is consumed THREE times (df filter + both join
     // sides); persisted, the narrow extraction runs one corpus scan
     // instead of three — at deployment scale the fingerprint table is a
@@ -1757,12 +1670,11 @@ object NearDup extends QueryModule {
     // postings crossed five exchange/sort stages at 56 B/row and
     // filled >73 GB of scratch at 10⁷ docs (the run died); the 32-byte
     // two-long posting fits the same pipeline in memory.
-    val f = winnowFingerprints(
+    val f = Release.hold("NearDup.winnowFps")(winnowFingerprints(
       Tables.documents(s, d).select($"doc_id", $"text"))
       .select($"doc_id", $"n_fps", xxhash64($"fp").as("fp"),
         xxhash64(lit(0x5851F42D4C957F2DL), $"fp").as("fp2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastWinnowFps.set(f)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // df cap as a broadcast ANTI-join on the HOT set: hot fingerprints
     // (boilerplate head) are few by construction, so the cached
     // postings never re-sort against a corpus-sized keep-list — same

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.Release
 import graft.ops.{QueryDef, QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (north-star extension;
@@ -378,32 +379,8 @@ object Similarity extends QueryModule {
     * K is the lever (K ∝ corpus/target_cell_size keeps cells, and hence
     * per-cell pair counts, constant), exactly how IVF indexes keep
     * "within-cell" work flat as the corpus grows. */
-  /** The previous [[labelBucketTopK]] invocation's cached assignment:
-    * unpersisted BEFORE the new persist registers — a re-run builds the
-    * identical logical plan, so persist-then-unpersist would find the
-    * old CacheManager entry ('Asked to cache already cached data') and
-    * the unpersist of the old handle would then drop the NEW entry too
-    * (CacheManager matches by plan). Unpersist-first keeps a long-lived
-    * session at ONE cached assignment with no warning. The ordering
-    * assumes the gate/bench call pattern — the previous query's result
-    * has been materialized (or abandoned) by the time the operator runs
-    * again. */
-  private val lastCells =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Option(lastSemCand.getAndSet(null))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
-    Seq(lastCells, lastSemCells).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.unpersist(false))
-    }
-  }
-
   def labelBucketTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = Tables.embeddings(s, d)
       .select($"vec_id", $"label", $"embedding".as("v"))
       .withColumn("nrm", l2Norm($"v"))
@@ -413,10 +390,10 @@ object Similarity extends QueryModule {
     // table is the (small) id+vector assignment; a real
     // deployment materializes the IVF assignment as a stored table and
     // joins against that, exactly like [[ivfTopK]] probes [[ivfAssign]].
-    val cells = assignTo(e, centroids(e))
-      .select($"label", $"centroid_id", $"vec_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastCells.set(cells)
+    val cells = Release.hold("Similarity.cells")(
+      assignTo(e, centroids(e))
+        .select($"label", $"centroid_id", $"vec_id", $"v", $"nrm")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"label", $"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"label", $"centroid_id", $"vec_id".as("id_b"),
@@ -449,24 +426,13 @@ object Similarity extends QueryModule {
     * vec_id and is a small broadcast side in practice. */
   private val SemDedupTau = 0.3
 
-  /** One-slot free list for [[cascadeDedup]]'s candidate checkpoint —
-    * same swap discipline as [[graft.operators.NearDup]].lastCand. */
-  private val lastSemCand =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.sql.DataFrame](null)
-
-  private val lastSemCells =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // unpersist-first, same reasoning as [[labelBucketTopK]]'s slot
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+    val cells = Release.hold("Similarity.semCells")(
+      assignTo(e, centroids(e))
+        .select($"vec_id", $"centroid_id", $"v", $"nrm")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -494,13 +460,12 @@ object Similarity extends QueryModule {
     * [[semanticDedup]]. */
   def semanticDedup2(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
     val cb2 = twoLevelFrom(centroids(e), nSuper = 2)
-    val cells = assignTo2(e, cb2, nprobe = 1)
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+    val cells = Release.hold("Similarity.semCells")(
+      assignTo2(e, cb2, nprobe = 1)
+        .select($"vec_id", $"centroid_id", $"v", $"nrm")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -553,12 +518,11 @@ object Similarity extends QueryModule {
     * threshold buys). */
   def cascadeDedup(s: SparkSession, d: String, tau: Double): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+    val cells = Release.hold("Similarity.semCells")(
+      assignTo(e, centroids(e))
+        .select($"vec_id", $"centroid_id", $"v", $"nrm")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -574,8 +538,7 @@ object Similarity extends QueryModule {
         cosineWithNorms($"va", $"vb", $"na", $"nb").as("cosine"))
       .where($"id_a" < $"id_b" && $"cosine" >= lit(tau))
       .localCheckpoint(true)
-    Option(lastSemCand.getAndSet(cand))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+    Release.hold("Similarity.semCand")(cand)
     val docs = graft.operators.NearDup.candidateBounded(
         Tables.documents(s, d), cand)
       .select($"doc_id", array_distinct(split($"text", " ")).as("types"))
@@ -609,13 +572,12 @@ object Similarity extends QueryModule {
     * reported: the verdict on the standing corpus cannot change. */
   def incrementalSemanticDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
-      .select($"vec_id", $"centroid_id", $"v", $"nrm",
-        ($"vec_id" % 10 >= 8).as("fresh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+    val cells = Release.hold("Similarity.semCells")(
+      assignTo(e, centroids(e))
+        .select($"vec_id", $"centroid_id", $"v", $"nrm",
+          ($"vec_id" % 10 >= 8).as("fresh"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val index = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"), $"fresh".as("fresh_a"))
     val probe = cells.where($"fresh").select($"centroid_id",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Release
 import graft.ops.{QueryDef, QueryModule, Tables}
 
 /** Text-analysis + deduplication operators over the `documents` table — the
@@ -639,24 +640,6 @@ object TextOps extends QueryModule {
   def sourceOverlap(s: SparkSession, d: String): DataFrame =
     sourceOverlapDocs(Tables.documents(s, d))
 
-  /** One-slot cache for the gram→source-set postings table: it feeds
-    * the source list, the per-source counts, and the pair-intersection
-    * extraction — Catalyst does not CSE the subtree, so without a
-    * persist every consumer re-runs the corpus pass. Unpersist-FIRST
-    * swap, same reasoning as [[graft.operators.Similarity]]'s
-    * assignment cache. */
-  private val lastGrams =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private val lastSketch =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit =
-    Seq(lastGrams, lastSketch, lastSketchOnly, lastCurate).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.unpersist(false))
-    }
-
   /** 5-token-gram OCCURRENCES as (source, md5-hex) — the shared scan
     * stage of both overlap paths; md5 is the engine-portable key. */
   private def gramOccurrences(docs: DataFrame): DataFrame = {
@@ -701,7 +684,6 @@ object TextOps extends QueryModule {
       docs: DataFrame, k: Int = 128): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    Option(lastGrams.getAndSet(null)).foreach(_.unpersist(false))
     // THE one corpus-grain pass, shared by both answers: gram
     // occurrences aggregated into a source-SET posting per distinct
     // gram. Map-side collect_set partials dedup before the exchange,
@@ -711,10 +693,13 @@ object TextOps extends QueryModule {
     // corpus-grain state (every distinct gram): right for the bounded
     // audit SFs this query serves; at corpus scale run
     // [[sourceOverlapSketch]], which never materializes it.
-    val postings = gramOccurrences(docs)
+    //
+    // The postings feed the source list, the per-source counts and the
+    // pair-intersection extraction; Catalyst does not CSE the subtree,
+    // so without the persist every consumer re-runs the corpus pass.
+    val postings = Release.hold("TextOps.grams")(gramOccurrences(docs)
       .groupBy($"h").agg(collect_set($"source").as("ss"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastGrams.set(postings)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val expanded = postings.select($"h", explode($"ss").as("source"))
     // per-source KMV sketches as SORTED ARRAYS (S rows total) — all
     // est sides broadcast-consume them, so they are persisted. r13
@@ -723,11 +708,9 @@ object TextOps extends QueryModule {
     // two passes + two exchanges over the corpus-grain expansion).
     val bk = udaf(new graft.pipeline.Aggregators.BottomKAgg(k),
       org.apache.spark.sql.Encoders.STRING)
-    Option(lastSketch.getAndSet(null)).foreach(_.unpersist(false))
-    val perSrc = expanded.groupBy($"source")
+    val perSrc = Release.hold("TextOps.sketch")(expanded.groupBy($"source")
       .agg(bk($"h").as("sk"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSketch.set(perSrc)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val skArr = perSrc.select($"source", $"sk")
     val perSrcN = perSrc.select($"source", $"n")
     val est = kmvEstimates(skArr, k)
@@ -774,19 +757,15 @@ object TextOps extends QueryModule {
   def sourceOverlapSketch(s: SparkSession, d: String): DataFrame =
     sourceOverlapSketchDocs(Tables.documents(s, d))
 
-  private val lastSketchOnly =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   private[graft] def sourceOverlapSketchDocs(
       docs: DataFrame, k: Int = 128): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val bk = udaf(new graft.pipeline.Aggregators.BottomKAgg(k),
       org.apache.spark.sql.Encoders.STRING)
-    val skArr = gramOccurrences(docs)
+    val skArr = Release.hold("TextOps.sketchOnly")(gramOccurrences(docs)
       .groupBy($"source").agg(bk($"h").as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastSketchOnly.getAndSet(skArr)).foreach(_.unpersist(false))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     kmvEstimates(skArr, k)
       .select($"src_a", $"src_b", $"sketch_hits", $"k_used",
         when($"k_used" === 0L, 0.0)
@@ -895,15 +874,12 @@ object TextOps extends QueryModule {
     // plus the node list and the final verdict join) and Catalyst does
     // not CSE across DataFrame reuse, so without materialization every
     // consumer re-runs the scan + fingerprint stage: measured 184 s vs
-    // ~60 s of component cost at 10^6 docs. One-slot unpersist-first
-    // caches (the library-wide serial-consumer discipline) pin the scan
-    // to one evaluation per stage; at deployment scale this
+    // ~60 s of component cost at 10^6 docs. The held cache pins the
+    // scan to one evaluation per stage; at deployment scale this
     // materialization point is where a pipeline would checkpoint
     // between stages anyway.
-    Option(lastCurate.getAndSet(null)).foreach(_.unpersist(false))
-    val staged = curateStagedTable(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastCurate.set(staged)
+    val staged = Release.hold("TextOps.curate")(curateStagedTable(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (nd, ndSmall) = curateNd(staged)
     curateVerdict(staged, nd, ndSmall)
   }
@@ -966,11 +942,6 @@ object TextOps extends QueryModule {
         coalesce($"reason12", $"nd_reason", lit("kept")).as("verdict"))
       .orderBy($"doc_id")
   }
-
-  /** One-slot cache for [[curateCorpus]]'s staged table — unpersist-
-    * FIRST swap, same serial-consumer reasoning as [[lastGrams]]. */
-  private val lastCurate =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Lexical diversity per document: whitespace token count, distinct
     * token ("type") count, and the type-token ratio as exact

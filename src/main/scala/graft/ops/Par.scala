@@ -39,9 +39,9 @@ object Par {
     * (guide §2.6: actions are only sequential because driver code calls
     * them sequentially — overlapping lets the next job's tasks back-fill
     * executors freed by the current job's straggler tail). Use ONLY for
-    * work with no data or transient-state dependency: one-slot
-    * checkpoint swaps are per-slot atomic, but two tasks touching the
-    * SAME slot would free blocks out from under each other. Exceptions
+    * work with no data or transient-state dependency: the pool threads
+    * inherit the caller's [[graft.Release]] scope, so two tasks holding
+    * the SAME slot would free blocks out from under each other. Exceptions
     * propagate to the caller; the pool is per-call and bounded by the
     * task count (2-3 concurrent jobs — enough to fill a tail, not
     * enough to fight for executors). */
@@ -61,23 +61,5 @@ object Par {
         }
       } finally pool.shutdown()
     }
-  }
-
-  /** Two-task form of [[concurrently]], keeping the result types. */
-  def concurrently2[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(
-        new java.util.concurrent.Callable[A] { def call(): A = a })
-      val fb = pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = b })
-      def unwrap[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      (unwrap(fa), unwrap(fb))
-    } finally pool.shutdown()
   }
 }

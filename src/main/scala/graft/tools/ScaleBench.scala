@@ -228,19 +228,21 @@ object ScaleBench {
     // SPARK_GRAFT_BENCH_ONLY — focused re-probes without the full sweep
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // each rung runs in its own Release scope, freed after the clock
+    // stops: without that, the previous rung's pinned blocks squeeze the
+    // execution pool and inflated a following rung ~2× at 10⁷
     def time(name: String)(body: => org.apache.spark.sql.DataFrame): Unit = {
       if (!only.forall(_.contains(name))) return
-      val t0 = System.nanoTime()
-      val d = body
-      val rows = d
-        .select(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*)).as("h"))
-        .agg(count(lit(1)), bit_xor($"h")).collect().head.getLong(0)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (rows, sec) = graft.Release.scoped {
+        val t0 = System.nanoTime()
+        val d = body
+        val rows = d
+          .select(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))
+            .as("h"))
+          .agg(count(lit(1)), bit_xor($"h")).collect().head.getLong(0)
+        (rows, (System.nanoTime() - t0) / 1e9)
+      }
       println(f"""{"shape":"$name","n":$n,"rows":$rows,"sec":$sec%.2f}""")
-      // each rung measured from a clean slate: without this, the
-      // previous rung's pinned blocks squeeze the execution pool and
-      // inflated a following rung ~2× at 10⁷ (see graft.Release)
-      graft.Release.transients()
     }
 
     time("minhash_neardup") {
@@ -340,15 +342,18 @@ object ScaleBench {
     // key itself and whose inner shapes print rows + xor for identity
     // comparison across variants
     def timeA(name: String)(body: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val d = body
-      val Array(rows, h) = d
-        .select(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*)).as("h"))
-        .agg(count(lit(1)), bit_xor($"h")).collect()
-        .head.toSeq.map(v => Option(v).map(_.toString).getOrElse("0")).toArray
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (rows, h, sec) = graft.Release.scoped {
+        val t0 = System.nanoTime()
+        val d = body
+        val Array(rows, h) = d
+          .select(xxhash64(struct(d.columns.toIndexedSeq.map(col): _*))
+            .as("h"))
+          .agg(count(lit(1)), bit_xor($"h")).collect()
+          .head.toSeq.map(v => Option(v).map(_.toString).getOrElse("0"))
+          .toArray
+        (rows, h, (System.nanoTime() - t0) / 1e9)
+      }
       println(f"""{"shape":"$name","n":$n,"rows":$rows,"xor":"$h","sec":$sec%.2f}""")
-      graft.Release.transients()
     }
     if (only.exists(_.contains("lsh_anatomy"))) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -1101,8 +1106,7 @@ object ScaleBench {
           f""""build_sec":$buildSec%.1f,"incremental_sec":$incSec%.1f,""" +
           f""""full_sec":$fullSec%.1f,"parity_mismatches":$bad}""")
         require(bad == 0L, s"retract_text parity violated: $bad")
-        Seq(removed, inc, fPost, fullIdx)
-          .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+        Seq(removed, inc, fPost, fullIdx).foreach(graft.Release.free)
       }
       prevFallback match {
         case Some(v) => spark.conf.set(
@@ -2274,9 +2278,9 @@ object ScaleBench {
         nd.write.mode("overwrite").parquet(s"$dir/curate_nd.parquet")
         ndSmall = small
       }
-      // one-slot module refs (LSH checkpoint, staged cache) must be
+      // held intermediates (LSH checkpoint, staged cache) must be
       // cleared while THIS context is alive — a later session's
-      // unpersist-first swap on a dead context NPEs in BlockManager
+      // unpersist-first hold on a dead context NPEs in BlockManager
       graft.Release.transients()
       s2.stop()
       // stage 3: final verdict join + checksum

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
 import graft.functions.SimHash
 
 /** The SQL registration path: GraftExtensions.register (or
@@ -36,5 +40,27 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(pii.getAs[Long]("n_emails") === 1L)
     assert(pii.getAs[Long]("n_ips") === 1L)
     assert(pii.getAs[String]("redacted") === "mail <EMAIL> ip <IP>")
+  }
+
+  test("the builder-time extension injects exactly the functions register " +
+      "installs") {
+    val injected = scala.collection.mutable.Buffer.empty[String]
+    val ext = new SparkSessionExtensions {
+      override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+          Seq[Expression] => Expression)): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new GraftExtensions()(ext)
+    // a fresh session has none of them until register runs
+    val fresh = spark.newSession()
+    def names = fresh.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names
+    GraftExtensions.register(fresh)
+    val registered = names -- before
+    assert(injected.size === injected.distinct.size)
+    assert(injected.toSet === registered)
+    assert(registered.size === 9)
   }
 }

@@ -669,6 +669,13 @@ class NearDupSpec extends SparkSpecBase {
     assert(got.count() === 0L)
   }
 
+  test("pagerank: zero rounds is rejected up front") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    intercept[IllegalArgumentException](
+      NearDup.pageRankOnPairs(pairs, iters = 0))
+  }
+
   test("candidate-bounded verify: under the cap docs shrink to candidate " +
       "ids via a broadcast semi-join; over the cap docs pass through") {
     import spark.implicits._
@@ -745,22 +752,5 @@ class NearDupSpec extends SparkSpecBase {
     val cc = NearDup.dedupClusters(spark, sfDir)
       .as[(Long, Long)].collect().toMap
     touched.foreach(id => assert(labels(id) === cc(id), s"doc $id"))
-  }
-
-  test("Release.transients frees every block the operator family pins " +
-      "and is idempotent") {
-    val sc = spark.sparkContext
-    graft.Release.transients() // clear whatever earlier tests pinned
-    val before = sc.getPersistentRDDs.keySet
-    // checkpoint-backed (cand + labels) and window paths both exercised
-    NearDup.dedupClusters(spark, sfDir).count()
-    NearDup.dedupSurvivor(spark, sfDir).count()
-    assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty,
-      "expected the run to pin checkpoint blocks")
-    graft.Release.transients()
-    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "release must drop every block the run pinned")
-    graft.Release.transients() // idempotent on an empty slate
-    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
   }
 }
