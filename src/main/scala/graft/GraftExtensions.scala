@@ -50,8 +50,7 @@ object GraftExtensions {
       args(0), intArg(args(1), "bands"), intArg(args(2), "rows"))),
     ("minhash_band_keys", classOf[MinHashBandKeysExpr],
       args => MinHashBandKeysExpr(args(0), intArg(args(1), "perms"),
-        intArg(args(2), "bands"))),
-    ("pii_scan", classOf[PiiScanExpr], args => PiiScanExpr(args.head)))
+        intArg(args(2), "bands"))))
 
   /** Runtime registration for an ALREADY-built session (builder-time
     * extensions only apply to new sessions; `getOrCreate` on an existing

@@ -25,17 +25,16 @@ object Curation extends QueryModule {
 
   /** Match-count via regexp_extract_all (group 0 explicit: Spark 4 ANSI
     * requires the index; DuckDB's default group is already 0). */
-  private def nMatches(c: Column, re: String): Column =
+  private[graft] def nMatches(c: Column, re: String): Column =
     size(regexp_extract_all(c, lit(re), lit(0))).cast("long")
 
   /** Conservative RE2-subset patterns (no lookaround, no backreference)
-    * so Java regex (Spark) and RE2 (DuckDB) agree match-for-match.
-    * The strings live on [[graft.functions.PiiScan]] (the fused kernel
-    * compiles them once); these aliases keep the oracle SQL and the
-    * regex-chain fallback reading from the same source. */
-  private[graft] val EmailRe = graft.functions.PiiScan.EmailRe
-  private[graft] val IpRe = graft.functions.PiiScan.IpRe
-  private[graft] val PhoneRe = graft.functions.PiiScan.PhoneRe
+    * so Java regex (Spark) and RE2 (DuckDB) agree match-for-match. The
+    * operator and the `q_pii_redact` oracle SQL both read them. */
+  private[graft] val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
+  private[graft] val IpRe =
+    "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
+  private[graft] val PhoneRe = "\\b555-[0-9]{4}\\b"
 
   /** Redaction pipeline over a text column: emails, then IPv4s, then
     * phone-shaped numbers, each replaced by a typed tag. Email runs
@@ -56,24 +55,7 @@ object Curation extends QueryModule {
     * cross-engine, not a trivially-empty match set. Narrow projection —
     * no shuffle, and at 100 TB the scrub runs at scan speed with the
     * match counting sharing the scan. */
-  def piiRedact(s: SparkSession, d: String): DataFrame =
-    piiRedactWith(s, d, sortExchange = false)
-
-  /** [[piiRedact]] with the sort-input shape selectable, for the
-    * ScaleBench `pii_redact_sortx` rung (r14): a top-level orderBy's
-    * range partitioner SAMPLES its child, so the scan→kernel→orderBy
-    * shape executes the regex kernel twice — once for the sample pass,
-    * once for the sort shuffle. `sortExchange = true` inserts a hash
-    * exchange between kernel and sort: the kernel output (narrow:
-    * doc_id + 3 counts + md5) materializes as shuffle files, the sample
-    * pass re-reads those instead of re-running the kernel (completed
-    * map stages are skipped; narrow stages are not).
-    *
-    * MEASURED at 10⁷ rows (the rung figures were never committed) and
-    * adopted per the winner; the bench SF had already measured the two
-    * forms a wash in r13 (0.67/0.73 vs 0.58/0.75 — noise band). */
-  private[graft] def piiRedactWith(s: SparkSession, d: String,
-      sortExchange: Boolean): DataFrame = {
+  def piiRedact(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val planted = concat(
       $"text",
@@ -86,34 +68,17 @@ object Curation extends QueryModule {
     val base = graft.ops.Par.spread(
       Tables.documents(s, d).select($"doc_id", planted.as("aug")),
       $"doc_id")
-    // DEFAULT: the 6-expression regexp chain. The fused
-    // single-expression kernel ([[graft.functions.PiiScan]] — same
-    // java.util.regex engine, one string conversion instead of six) was
-    // built and A/B'd per the round-9 plan and measured a WASH: sf0.1
-    // min-of-3 0.930 vs 0.928 s, 10⁶ single-run 4.41 vs 4.77 s (±8%
-    // host band) — the regex traversals dominate and Spark's regexp
-    // machinery already caches compiled patterns, so the plumbing the
-    // fusion removes wasn't the cost. Landed per the "only if faster"
-    // rule: chain stays default, kernel selectable
-    // (SPARK_GRAFT_PII=kernel) and fuzz-pinned for re-adjudication.
-    val scanned =
-      if (sys.env.getOrElse("SPARK_GRAFT_PII", "regex") == "regex")
-        base.select(
-          $"doc_id",
-          nMatches($"aug", EmailRe).as("n_emails"),
-          nMatches($"aug", IpRe).as("n_ips"),
-          nMatches($"aug", PhoneRe).as("n_phones"),
-          md5(redactPii($"aug")).as("red_fp"))
-      else
-        base.select($"doc_id",
-            graft.functions.PiiScan.pii_scan($"aug").as("p"))
-          .select(
-            $"doc_id",
-            $"p.n_emails".as("n_emails"),
-            $"p.n_ips".as("n_ips"),
-            $"p.n_phones".as("n_phones"),
-            md5($"p.redacted").as("red_fp"))
-    (if (sortExchange) scanned.repartition($"doc_id") else scanned)
+    // The six-expression regexp chain measured a wash against a fused
+    // single-expression kernel (sf0.1 min-of-3 0.928 vs 0.930 s) and
+    // the kernel was deleted; see COVERAGE.md "PII / span-scrub kernel
+    // A/B".
+    base
+      .select(
+        $"doc_id",
+        nMatches($"aug", EmailRe).as("n_emails"),
+        nMatches($"aug", IpRe).as("n_ips"),
+        nMatches($"aug", PhoneRe).as("n_phones"),
+        md5(redactPii($"aug")).as("red_fp"))
       .orderBy($"doc_id")
   }
 
@@ -800,7 +765,7 @@ object Curation extends QueryModule {
                  - CAST(n_batch AS DOUBLE) / t_batch) AS share_gap
         FROM h CROSS JOIN t ORDER BY bucket""")),
     QueryDef(
-      "q_pii_redact", piiRedact(_, _), Some("""
+      "q_pii_redact", piiRedact(_, _), Some(s"""
         WITH a AS (
           SELECT doc_id,
                  text || ' mail u' || CAST(doc_id AS VARCHAR) || '@ex'
@@ -811,18 +776,18 @@ object Curation extends QueryModule {
           FROM documents)
         SELECT doc_id,
                CAST(len(regexp_extract_all(aug,
-                 '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT)
+                 '$EmailRe')) AS BIGINT)
                  AS n_emails,
                CAST(len(regexp_extract_all(aug,
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))
+                 '$IpRe'))
                  AS BIGINT) AS n_ips,
-               CAST(len(regexp_extract_all(aug, '\b555-[0-9]{4}\b'))
+               CAST(len(regexp_extract_all(aug, '$PhoneRe'))
                  AS BIGINT) AS n_phones,
                md5(regexp_replace(regexp_replace(regexp_replace(aug,
-                 '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b',
+                 '$EmailRe', '<EMAIL>', 'g'),
+                 '$IpRe',
                  '<IP>', 'g'),
-                 '\b555-[0-9]{4}\b', '<PHONE>', 'g')) AS red_fp
+                 '$PhoneRe', '<PHONE>', 'g')) AS red_fp
         FROM a ORDER BY doc_id""")),
     QueryDef(
       "q_mix_sample", mixtureSample(_, _), Some(s"""

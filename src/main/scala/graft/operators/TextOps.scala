@@ -521,37 +521,30 @@ object TextOps extends QueryModule {
       .select($"doc_id", $"text",
         coalesce($"iv", array().cast("array<struct<s:int,e:int>>")).as("iv"),
         coalesce($"covered", lit(0L)).as("n_covered"))
-    // DEFAULT: the higher-order-function rewrite. The native
-    // interval-walk kernel ([[graft.functions.ScrubSpans]]) was built
-    // and A/B'd per the round-9 plan and did NOT win — sf0.1 min-of-3
-    // 1.305 (hof) vs 1.294 s (kernel), 10⁶ single-run 23.4 vs 25.1 s:
-    // this query's cost is the duplicated-span join, and the covered
-    // interval lists are short enough that the interpreted
-    // filter/exists lambda never shows. Landed per the "only if
-    // faster" rule: HOF stays default, kernel selectable
-    // (SPARK_GRAFT_SCRUB=kernel) and fuzz-pinned for re-adjudication.
-    if (sys.env.getOrElse("SPARK_GRAFT_SCRUB", "hof") == "hof")
-      joined
-        .select($"doc_id", split($"text", " ").as("t"), $"iv", $"n_covered")
-        .select($"doc_id",
-          size($"t").cast("long").as("n_tokens"),
-          $"n_covered",
-          array_join(
-            filter($"t", (x, idx) =>
-              !exists($"iv", v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
-            " ").as("clean_text"))
-        .orderBy($"doc_id")
-    else
-      joined
-        .select($"doc_id",
-          graft.functions.ScrubSpans.scrub_spans($"text", $"iv").as("sc"),
-          $"n_covered")
-        .select($"doc_id",
-          $"sc.n_tokens".as("n_tokens"),
-          $"n_covered",
-          $"sc.clean_text".as("clean_text"))
-        .orderBy($"doc_id")
+    // The higher-order-function rewrite measured a wash against a native
+    // interval-walk kernel at sf0.1 (1.305 vs 1.294 s) and won at 10⁶
+    // (23.4 vs 25.1 s), so the kernel was deleted; see COVERAGE.md
+    // "PII / span-scrub kernel A/B".
+    joined
+      .select($"doc_id", split($"text", " ").as("t"), $"iv", $"n_covered")
+      .select($"doc_id",
+        size($"t").cast("long").as("n_tokens"),
+        $"n_covered",
+        scrubTokens($"t", $"iv").as("clean_text"))
+      .orderBy($"doc_id")
   }
+
+  /** The span-scrub rewrite: drops every token whose 1-based position
+    * falls inside some (s, e) interval of `iv` and rejoins the rest with
+    * single spaces. `tokens` is `split(text, " ")`, which keeps the empty
+    * tokens that runs of spaces produce, so they occupy positions. It is
+    * taken already split so [[spanScrub]] evaluates the split once for
+    * both the rewrite and its token count. */
+  private[graft] def scrubTokens(tokens: Column, iv: Column): Column =
+    array_join(
+      filter(tokens, (_, idx) =>
+        !exists(iv, v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
+      " ")
 
   /** Per-document NOVELTY score — the fraction of a document's DISTINCT
     * 5-token-grams that appear in no other document. The inverse signal
@@ -795,33 +788,15 @@ object TextOps extends QueryModule {
     * fingerprint dedup, as (doc_id, text, n_tokens, reason12) where
     * reason12 ∈ {rule name, 'exact_dup', NULL = survivor}.
     *
-    * `narrowFpExchange` selects the physical shape of the fingerprint
-    * dedup (both produce IDENTICAL rows — first-by-doc_id per fp
-    * survives; the ScaleBench `curate_stages` probe measured both,
-    * hash-equal, at 10^6 docs):
-    *
-    *  - `false` (DEFAULT — the measured winner): the original
-    *    one-scan form — a row_number window over (fp, passed) that
-    *    shuffles every full row on fp. 51 s at 10^6 all-pass, 50 s
-    *    with 30% planted rule failures (post-kernel probe — the
-    *    figure of record, same run as COVERAGE round 8).
-    *  - `true`: quality filter AHEAD of the fingerprint stage (the
-    *    window already partitioned failed docs apart, so excluding
-    *    them is a plan change, not a semantic one); the fp exchange
-    *    becomes the map-side-combined aggregate fp → (min doc_id,
-    *    count) and only duplicating fps join back — text bytes cross
-    *    NO exchange. MEASURED SLOWER here: 155 s / 108 s on the same
-    *    corpora — the three separate evaluations of the scan+token
-    *    statistics (groupBy side, join side, fail branch; Catalyst
-    *    does not CSE across DataFrame branches) cost ~3x more than
-    *    the local text-width shuffle they avoid. The shape is kept
-    *    (flag, probe) because its trade reverses exactly when
-    *    shuffle, not CPU, binds — a network-bound multi-rack
-    *    cluster — and the probe prints both figures plus row hashes
-    *    so the adjudication can be re-run on the target fabric.
+    * The fingerprint dedup is one row_number window over (fp, passed)
+    * that shuffles every full row on fp. A filter-first form that kept
+    * text out of the exchange gave identical rows but ran 3× slower at
+    * 10⁶ docs and 10× slower at 10⁷ (three evaluations of the scan and
+    * token statistics cost more than the text-width shuffle saved), so
+    * it was deleted; see COVERAGE.md "Curation cascade attribution".
     */
-  private[graft] def curateStagedTable(s: SparkSession, d: String,
-      narrowFpExchange: Boolean = false): DataFrame = {
+  private[graft] def curateStagedTable(s: SparkSession, d: String)
+      : DataFrame = {
     import s.implicits._
     val t = $"text"
     val nTokens = tokenCount(t)
@@ -834,37 +809,14 @@ object TextOps extends QueryModule {
       .select($"doc_id", $"lang", t,
         nTokens.as("n_tokens"), nStop.as("n_stop"))
       .withColumn("pre_reason", preReason)
-    if (narrowFpExchange) {
-      val pass = base.where($"pre_reason".isNull)
-        .select($"doc_id", $"text", $"n_tokens", md5(normalize(t)).as("fp"))
-      val dupFirst = pass
-        .groupBy($"fp")
-        .agg(min($"doc_id").as("first_id"), count(lit(1)).as("n_fp"))
-        .where($"n_fp" > 1)
-        .select($"fp", $"first_id")
-      // null-SAFE fp equality: groupBy groups NULL fps into one group,
-      // so the join-back must match them too — a plain equi-join would
-      // null-reject and silently diverge from the window form on any
-      // corpus with NULL text
-      val passTagged = pass
-        .join(dupFirst, pass("fp") <=> dupFirst("fp"), "left")
-        .select(pass("doc_id"), pass("text"), pass("n_tokens"),
-          when($"first_id".isNotNull && pass("doc_id") =!= $"first_id",
-            "exact_dup").as("reason12"))
-      val fail = base.where($"pre_reason".isNotNull)
-        .select($"doc_id", $"text", $"n_tokens",
-          $"pre_reason".as("reason12"))
-      passTagged.unionByName(fail)
-    } else {
-      val w = Window.partitionBy($"fp", $"pre_reason".isNull)
-        .orderBy($"doc_id")
-      base
-        .withColumn("fp", md5(normalize(t)))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("reason12",
-          coalesce($"pre_reason", when($"rn" > 1, "exact_dup")))
-        .select($"doc_id", $"text", $"n_tokens", $"reason12")
-    }
+    val w = Window.partitionBy($"fp", $"pre_reason".isNull)
+      .orderBy($"doc_id")
+    base
+      .withColumn("fp", md5(normalize(t)))
+      .withColumn("rn", row_number().over(w))
+      .withColumn("reason12",
+        coalesce($"pre_reason", when($"rn" > 1, "exact_dup")))
+      .select($"doc_id", $"text", $"n_tokens", $"reason12")
   }
 
   def curateCorpus(s: SparkSession, d: String): DataFrame = {

@@ -294,20 +294,9 @@ object ScaleBench {
     time("span_scrub") {
       graft.operators.TextOps.spanScrub(spark, dir)
     }
-    // PII scan+redact: row-local regex work — the fused-kernel-vs-chain
-    // A/B runs this shape under SPARK_GRAFT_PII=kernel|regex
+    // PII scan+redact: row-local regex work
     time("pii_redact") {
       graft.operators.Curation.piiRedact(spark, dir)
-    }
-    // r14: the range-sort double-execution rung — same kernel, but a
-    // hash exchange materializes the kernel output before the orderBy,
-    // so the range partitioner's sample pass re-reads shuffle files
-    // instead of re-running the regex kernel. Compare against the
-    // pii_redact figure from the SAME run; the winner at ≥10⁷ is what
-    // the gate operator adopts (see Curation.piiRedactWith).
-    time("pii_redact_sortx") {
-      graft.operators.Curation.piiRedactWith(spark, dir,
-        sortExchange = true)
     }
     time("dedup_survivor") {
       graft.operators.NearDup.dedupSurvivor(spark, dir)
@@ -330,13 +319,10 @@ object ScaleBench {
       graft.operators.TextOps.curateCorpus(spark, curDir)
     }
     // LSH candidate-stage anatomy — explicit opt-in
-    // (SPARK_GRAFT_SCALE_ONLY=lsh_anatomy): A/Bs the two candidate-pair
-    // forms (band self-join vs single-shuffle bucket aggregation) on
-    // the same banded stream, with the narrow signature pass timed
-    // alone as the floor, plus the full verified pairsOver under each
-    // form. Row-count + xxhash identity is printed per form — the
-    // adjudication record for which form candidatesFromBands defaults
-    // to.
+    // (SPARK_GRAFT_SCALE_ONLY=lsh_anatomy): the scan, shingle, signature
+    // and banding passes timed alone as floors under the band self-join
+    // candidates and the deployed verified pairs, each with its
+    // row-count + xxhash identity.
     // same checksum materialization as `time`, minus the name filter —
     // for rungs (lsh_anatomy, salt_vs_aqe) whose opt-in gate is the rung
     // key itself and whose inner shapes print rows + xor for identity
@@ -374,31 +360,9 @@ object ScaleBench {
       timeA("lsh_banded_narrow") {
         graft.operators.NearDup.bandedOver(docs)
       }
-      for (form <- Seq("join", "bucket")) {
-        timeA(s"lsh_candidates_$form") {
-          graft.operators.NearDup.candidatesFromBands(
-            graft.operators.NearDup.bandedOver(docs), form)
-        }
-      }
-      for (form <- Seq("join", "bucket")) {
-        // the historical UNBOUNDED verify shape (full-corpus shingle
-        // join on both sides) — kept as the comparison record for the
-        // candidate-bounded default below
-        timeA(s"lsh_verified_pairs_$form") {
-          graft.operators.NearDup.candidatesFromBands(
-            graft.operators.NearDup.bandedOver(docs), form)
-            .join(docs.select($"doc_id".as("id_a"),
-              graft.functions.VectorExpressions
-                .text_shingles($"text", 3).as("sh_a")), Seq("id_a"))
-            .join(docs.select($"doc_id".as("id_b"),
-              graft.functions.VectorExpressions
-                .text_shingles($"text", 3).as("sh_b")), Seq("id_b"))
-            .withColumn("n_common", graft.functions.VectorExpressions
-              .intersect_count($"sh_a", $"sh_b"))
-            .where($"n_common".cast("double") /
-              (size($"sh_a") + size($"sh_b") - $"n_common") >= 0.8)
-            .select($"id_a", $"id_b")
-        }
+      timeA("lsh_candidates_join") {
+        graft.operators.NearDup.candidatesFromBands(
+          graft.operators.NearDup.bandedOver(docs))
       }
       // the deployed verify (candidate checkpoint + broadcast-capped
       // id semi-filter ahead of the shingle projection) — what
@@ -480,11 +444,12 @@ object ScaleBench {
         }
       }
     }
-    // stage attribution + fingerprint-exchange A/B for the cascade —
-    // explicit opt-in (SPARK_GRAFT_SCALE_ONLY=curate_stages): it re-runs
-    // the cascade's stages with materialization barriers between them,
-    // deliberately paying persist costs the fused plan avoids, to ATTRIBUTE
-    // the fused figure, not to add to the default sweep.
+    // stage attribution for the cascade — explicit opt-in
+    // (SPARK_GRAFT_SCALE_ONLY=curate_stages): it re-runs the cascade's
+    // stages with a materialization barrier after each, so the clock
+    // isolates it, deliberately paying persist costs the fused plan
+    // avoids, to ATTRIBUTE the fused figure, not to add to the default
+    // sweep.
     if (only.exists(_.contains("curate_stages"))) {
       import org.apache.spark.storage.StorageLevel
       def timed[T](name: String)(body: => T): T = {
@@ -494,32 +459,6 @@ object ScaleBench {
           f""""sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
         r
       }
-      // A/B the two staged forms on the all-pass probe corpus and on a
-      // variant with 30% planted rule failures (the regime the
-      // filter-before-exchange order exists for)
-      val curDir30 = s"$dir-curate30"
-      spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text",
-          when($"doc_id" % 10 < 3, $"text") // no stopwords -> low_stopword
-            .otherwise(concat($"text", lit(" the a of and"))))
-        .write.mode("overwrite").parquet(s"$curDir30/documents.parquet")
-      Seq(("allpass", curDir), ("fail30", curDir30)).foreach { case (tag, cd) =>
-        Seq(("narrow", true), ("window", false)).foreach { case (form, flag) =>
-          val t0 = System.nanoTime()
-          val df = graft.operators.TextOps
-            .curateStagedTable(spark, cd, narrowFpExchange = flag)
-          val r = df.select(xxhash64(
-              struct(df.columns.toIndexedSeq.map(col): _*)).as("h"))
-            .agg(count(lit(1)), bit_xor($"h")).collect().head
-          // rows+hash printed so the two forms' row-identity is ON RECORD,
-          // not just asserted: same corpus -> same (rows, hash) pair
-          println(f"""{"shape":"curate_stage_staged_${form}_$tag",""" +
-            f""""n":$n,"rows":${r.getLong(0)},"hash":${r.getLong(1)},""" +
-            f""""sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-        }
-      }
-      // stage attribution of the cascade (default staged form), with a
-      // barrier after each stage so the clock isolates it
       val staged = timed("filter_fp") {
         val df = graft.operators.TextOps.curateStagedTable(spark, curDir)
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2331,7 +2270,7 @@ object ScaleBench {
       if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
       f.delete(); ()
     }
-    Seq(dir, s"$dir-curate", s"$dir-curate30", s"$dir-saltjoin")
+    Seq(dir, s"$dir-curate", s"$dir-saltjoin")
       .foreach(rmrf)
   }
 }

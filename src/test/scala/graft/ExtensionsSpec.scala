@@ -23,8 +23,7 @@ class ExtensionsSpec extends SparkSpecBase {
          size(band_keys(minhash_sig(array(42L), 8), 2, 4)) AS nbk,
          size(minhash_band_keys(array(42L), 8, 2)) AS nmbk,
          band_keys(minhash_sig(array(42L), 8), 2, 4)
-           = minhash_band_keys(array(42L), 8, 2) AS bk_eq,
-         pii_scan('mail a@b.io ip 1.2.3.4') AS pii
+           = minhash_band_keys(array(42L), 8, 2) AS bk_eq
       """).head()
     assert(row.getAs[Long]("sh") === SimHash.simhash64("a b c"))
     assert(row.getAs[Double]("dot") === 11.0)
@@ -36,10 +35,6 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(row.getAs[Int]("nmbk") === 2)
     // the fused kernel and the two-step form agree key-for-key
     assert(row.getAs[Boolean]("bk_eq"))
-    val pii = row.getAs[org.apache.spark.sql.Row]("pii")
-    assert(pii.getAs[Long]("n_emails") === 1L)
-    assert(pii.getAs[Long]("n_ips") === 1L)
-    assert(pii.getAs[String]("redacted") === "mail <EMAIL> ip <IP>")
   }
 
   test("the builder-time extension injects exactly the functions register " +
@@ -61,6 +56,6 @@ class ExtensionsSpec extends SparkSpecBase {
     val registered = names -- before
     assert(injected.size === injected.distinct.size)
     assert(injected.toSet === registered)
-    assert(registered.size === 9)
+    assert(registered.size === 8)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{array_join, exists, filter, lit, lower, regexp_extract_all, regexp_replace, size, split, struct, transform, trim}
+import org.apache.spark.sql.functions.{filter, lower, regexp_replace, size, split, struct, transform, trim}
 
 import graft.operators.TextOps
 
@@ -328,8 +328,9 @@ class TextOpsSpec extends SparkSpecBase {
     }
   }
 
-  test("PiiScan kernel matches the regexp_extract_all/regexp_replace chain exactly") {
+  test("PII redaction and match counts agree with a java.util.regex reference") {
     import spark.implicits._
+    import graft.operators.Curation
     // adversarial: emails whose local part is an IP, phones glued to
     // emails, boundary-breaking digits, multiple matches per row,
     // matches at string edges, and rows with none
@@ -337,6 +338,7 @@ class TextOpsSpec extends SparkSpecBase {
       "", "plain text no pii here",
       "u1@ex3.org", "10.2.3.4", "555-0123",
       "10.2.3.4u@ex.org after", // email whose local part eats an IP
+      "a.10.2.3.4@ex.org", // bounded IP inside an email: email must run first
       "x 555-0123@ex.org y", // phone-shaped local part: email wins
       "a@b.cd 1.2.3.4 555-9999", "1.2.3.4.5.6", "5555-01234",
       "mail u17@ex3.org tel 555-017 ip 10.2.17.17",
@@ -347,29 +349,38 @@ class TextOpsSpec extends SparkSpecBase {
     val fuzz = (1 to 300).map(_ =>
       (1 to rng.nextInt(50)).map(_ =>
         alphabet(rng.nextInt(alphabet.length))).mkString)
-    def nMatches(c: org.apache.spark.sql.Column, re: String) =
-      size(regexp_extract_all(c, lit(re), lit(0))).cast("long")
-    import graft.functions.PiiScan
-    val rows = (picked ++ fuzz).toDF("t")
-      .select(
-        nMatches($"t", PiiScan.EmailRe).as("e_ref"),
-        nMatches($"t", PiiScan.IpRe).as("i_ref"),
-        nMatches($"t", PiiScan.PhoneRe).as("p_ref"),
-        regexp_replace(regexp_replace(regexp_replace($"t",
-          PiiScan.EmailRe, "<EMAIL>"), PiiScan.IpRe, "<IP>"),
-          PiiScan.PhoneRe, "<PHONE>").as("r_ref"),
-        PiiScan.pii_scan($"t").as("k"))
-      .collect()
-    rows.foreach { r =>
-      val k = r.getStruct(4)
-      assert(r.getLong(0) === k.getLong(0), r)
-      assert(r.getLong(1) === k.getLong(1), r)
-      assert(r.getLong(2) === k.getLong(2), r)
-      assert(r.getString(3) === k.getString(3), r)
+    import java.util.regex.Pattern
+    val email = Pattern.compile(Curation.EmailRe)
+    val ip = Pattern.compile(Curation.IpRe)
+    val phone = Pattern.compile(Curation.PhoneRe)
+    def count(p: Pattern, t: String): Long = {
+      val m = p.matcher(t)
+      var c = 0L
+      while (m.find()) c += 1L
+      c
+    }
+    def redact(t: String): String =
+      phone.matcher(ip.matcher(email.matcher(t).replaceAll("<EMAIL>"))
+        .replaceAll("<IP>")).replaceAll("<PHONE>")
+    val inputs = picked ++ fuzz
+    val rows = inputs.toDF("t")
+      .select($"t",
+        Curation.nMatches($"t", Curation.EmailRe),
+        Curation.nMatches($"t", Curation.IpRe),
+        Curation.nMatches($"t", Curation.PhoneRe),
+        Curation.redactPii($"t"))
+      .as[(String, Long, Long, Long, String)].collect()
+    assert(rows.map(_._1).sorted.toSeq === inputs.sorted)
+    rows.foreach { case r @ (t, nE, nI, nP, red) =>
+      assert(nE === count(email, t), r)
+      assert(nI === count(ip, t), r)
+      assert(nP === count(phone, t), r)
+      assert(red === redact(t), r)
     }
   }
 
-  test("ScrubSpans kernel matches the split/filter/exists HOF form exactly") {
+  test("span-scrub token rewrite agrees with a split-on-space " +
+      "position-filter reference") {
     import spark.implicits._
     // adversarial token streams: empty text, leading/trailing/multiple
     // spaces (empty tokens count for split-position semantics),
@@ -401,24 +412,25 @@ class TextOpsSpec extends SparkSpecBase {
       }
       (text, iv)
     }
-    import graft.functions.ScrubSpans
-    val rows = (cases ++ fuzz)
-      .toDF("t", "ivr")
-      .select($"t",
+    val inputs = cases ++ fuzz
+    val rows = inputs.zipWithIndex
+      .map { case ((t, iv), i) => (i, t, iv) }
+      .toDF("i", "t", "ivr")
+      .select($"i", split($"t", " ").as("tok"),
         transform($"ivr", v =>
           struct(v("_1").as("s"), v("_2").as("e"))).as("iv"))
-      .select(
-        size(split($"t", " ")).cast("long").as("n_ref"),
-        array_join(
-          filter(split($"t", " "), (x, idx) =>
-            !exists($"iv", v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
-          " ").as("c_ref"),
-        ScrubSpans.scrub_spans($"t", $"iv").as("k"))
-      .collect()
-    rows.foreach { r =>
-      val k = r.getStruct(2)
-      assert(r.getLong(0) === k.getLong(0), r)
-      assert(r.getString(1) === k.getString(1), r)
+      .select($"i", size($"tok").cast("long"),
+        TextOps.scrubTokens($"tok", $"iv"))
+      .as[(Int, Long, String)].collect().sortBy(_._1)
+    assert(rows.length === inputs.length)
+    rows.zip(inputs).foreach { case (r @ (_, nTok, clean), (t, iv)) =>
+      val toks = t.split(" ", -1)
+      def covered(pos: Int) = iv.exists { case (s, e) => s <= pos && pos <= e }
+      val kept = toks.zipWithIndex.collect {
+        case (w, k) if !covered(k + 1) => w
+      }
+      assert(nTok === toks.length.toLong, r)
+      assert(clean === kept.mkString(" "), r)
     }
   }
 }
